@@ -45,7 +45,7 @@ def main(first: int, last: int) -> int:
                 shutil.rmtree(run_dir / "corpus", ignore_errors=True)
                 print(f"{w.name} seed {seed}: {inputs.sha256}", file=sys.stderr)
     finally:
-        spark.stop()
+        R.stop(spark)
         shutil.rmtree(run_dir, ignore_errors=True)
     path = R.BENCH / "pins.json"
     path.write_text(json.dumps(pins, indent=1, sort_keys=True) + "\n")

@@ -106,6 +106,21 @@ def session(cores: int, run_dir: Path):
     return spark
 
 
+def stop(spark) -> None:
+    """Stop the session, then the JVM PySpark launched for it (it exits
+    when its stdin closes), and wait until it has ended."""
+    from pyspark import SparkContext
+
+    if spark is not None:
+        spark.stop()
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        SparkContext._gateway = SparkContext._jvm = None
+        gateway.shutdown()
+        gateway.proc.stdin.close()
+        gateway.proc.wait(timeout=60)
+
+
 def timed(spark, pattern, seconds: float, min_groups: int, tracer):
     """Closed loop: run each (name, df) of pattern in turn to the noop
     sink, with the same GC fence before each job, and repeat the group
@@ -241,8 +256,7 @@ def run(args) -> int:
         }))
         return 0
     finally:
-        if spark is not None:
-            spark.stop()
+        stop(spark)
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
