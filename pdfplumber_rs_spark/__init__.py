@@ -15,4 +15,10 @@ is a from-scratch pure-Python/numpy implementation of the same *semantics*
 relational is DataFrame/SQL so Catalyst can optimize it.
 """
 
+from . import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+# Unpickling any engine kernel imports this package, so every later task
+# on a reused PySpark worker skips the per-task zip directory re-read.
+_zipcache.install()

@@ -200,7 +200,7 @@ def _empty_row(url: str, warnings: list, error: str | None, t0: float,
         "url": url, "page_number": 0, "width": 0.0, "height": 0.0,
         "rotation": 0, "text": "", "n_chars": 0, "n_words": 0,
         "n_tables": 0, "warnings": warnings, "error": error,
-        "kernel_ms": (time.time() - t0) * 1000.0,
+        "kernel_ms": (time.perf_counter() - t0) * 1000.0,
     }
     for s in (SECTIONS if include is None else include):
         row[s] = []
@@ -221,7 +221,7 @@ def _page_rows(url: str, data: bytes, options: ExtractOptions | None,
 
     inc = SECTIONS if include is None else tuple(include)
     want = set(inc)
-    t0 = time.time()
+    t0 = time.perf_counter()
     try:
         doc = Document(data, options)
     except Exception as e:  # noqa: BLE001 — lenient: bad PDF → error row
@@ -230,7 +230,7 @@ def _page_rows(url: str, data: bytes, options: ExtractOptions | None,
     lo = page_start if page_start is not None else 0
     hi = min(page_end if page_end is not None else doc.page_count, doc.page_count)
     for i in range(lo, hi):
-        t1 = time.time()
+        t1 = time.perf_counter()
         try:
             page = doc.page(i)
             words = page.extract_words()
@@ -319,7 +319,7 @@ def _page_rows(url: str, data: bytes, options: ExtractOptions | None,
             row["hyperlinks"] = list(page.hyperlinks) if page else []
         if "images" in want:
             row["images"] = list(page.images) if page else []
-        row["kernel_ms"] = (time.time() - t1) * 1000.0
+        row["kernel_ms"] = (time.perf_counter() - t1) * 1000.0
         rows.append(row)
     if not rows:  # zero-page document still yields one row (lineage)
         # a document that yields no pages at all is an error for lineage
@@ -379,7 +379,7 @@ def make_extract_kernel(options: ExtractOptions | None = None,
                     except OSError as exc:
                         out.append(_empty_row(
                             url, [], f"blob fetch failed: {exc}",
-                            time.time(), include))
+                            time.perf_counter(), include))
                         continue
                 out.extend(
                     _page_rows(

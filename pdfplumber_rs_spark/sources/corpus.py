@@ -1104,20 +1104,6 @@ def html_head_corpus_table(spark, sf_dir: str) -> DataFrame:
                                     CHROME_CORPUS_SCHEMA)
 
 
-def expected_text_col(text):
-    """Spark Column mirror of the oracle transform: what extract_text
-    must return for a pdf_from_text document."""
-    s = F.regexp_replace(
-        F.replace(text, F.lit("\t"), F.lit(" ")),
-        r"[^\n\x{0020}-\x{007E}\x{00A1}-\x{00FF}]", "",
-    )
-    lines = F.split(s, "\n")
-    cleaned = F.transform(
-        lines, lambda l: F.trim(F.regexp_replace(l, " +", " "))
-    )
-    return F.array_join(F.filter(cleaned, lambda l: l != ""), "\n")
-
-
 def _markdown_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Two-page docs for the PDF→Markdown sink (US-099 / anytomd
     fixtures): page 1 carries a 24pt Helvetica-Bold 'Doc N Title' (→ #)

@@ -3,9 +3,13 @@ exploded views, skew splitting, lineage, resume."""
 
 from __future__ import annotations
 
+import sys
+
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from pdfplumber_rs_spark import pipeline as P
+from pdfplumber_rs_spark import zipcache
 from pdfplumber_rs_spark.sources import pdfgen
 
 
@@ -175,3 +179,34 @@ def test_extract_pages_include_pruning(spark):
     assert "tables" in only_tables.columns and "chars" not in only_tables.columns
     trow = only_tables.collect()[0]
     assert trow.n_tables == 1 and len(trow.tables) == 1
+
+
+def test_zip_cache_patch_reaches_reused_workers(spark):
+    """Unpickling an engine kernel installs zipcache.invalidate_if_changed
+    in the Python worker, so the next task's start-up (PySpark's
+    importlib.invalidate_caches()) goes through it: its importers then
+    carry the stat key."""
+    def probe(batches):
+        import os
+        import sys
+        import zipimport
+        for _ in batches:
+            pass
+        zips = [f for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)]
+        yield pa.RecordBatch.from_pylist([{
+            "pid": os.getpid(),
+            "installed": zipimport.zipimporter.invalidate_caches
+            is zipcache.invalidate_if_changed,
+            "keyed": bool(zips) and all(hasattr(f, zipcache._KEY) for f in zips),
+        }])
+
+    df = spark.range(0, 8, 1, 8)
+    schema = "pid long, installed boolean, keyed boolean"
+    first, second = (df.mapInArrow(probe, schema).collect() for _ in range(2))
+    expected = sys.version_info < (3, 13)
+    assert all(r.installed == expected for r in first + second)
+    first_pids = {r.pid for r in first}
+    reused = [r for r in second if r.pid in first_pids]
+    assert len(second) == 8 and reused
+    assert all(r.keyed == expected for r in reused)
