@@ -101,10 +101,16 @@ class Page:
         # never required (crop/filter paths leave it None)
         self._char_cols = None
 
+    def _load_extras(self) -> None:
+        self._annotations, self._hyperlinks = self._extras_thunk()
+        # both results are cached now: drop the thunk, which holds the
+        # whole Document (xref, streams, caches) alive
+        self._extras_thunk = None
+
     @property
     def annotations(self) -> list[dict]:
         if self._annotations is None:
-            self._annotations, self._hyperlinks = self._extras_thunk()
+            self._load_extras()
         return self._annotations
 
     @annotations.setter
@@ -114,7 +120,7 @@ class Page:
     @property
     def hyperlinks(self) -> list[dict]:
         if self._hyperlinks is None:
-            self._annotations, self._hyperlinks = self._extras_thunk()
+            self._load_extras()
         return self._hyperlinks
 
     @hyperlinks.setter

@@ -25,9 +25,7 @@ Scale design:
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .arrow_rows import rows_kernel
 from .config import ExtractOptions, TableSettings, TextOptions, WordOptions
 
 # -- output schema --------------------------------------------------------------
@@ -357,48 +356,28 @@ def make_extract_kernel(options: ExtractOptions | None = None,
     """Build the mapInArrow kernel fn. When ranged=True the input carries
     page_start/page_end columns (giant-PDF split path). `include` prunes
     object sections at the kernel (manual projection pushdown)."""
-    arrow_schema = _arrow_schema_for(page_schema(include))
-    flush_rows = 512 if include == () else 64
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            urls = d["url"]
-            htmls = d["html"]
-            paths = d.get("blob_path", [None] * len(urls))
-            starts = d.get("page_start", [None] * len(urls))
-            ends = d.get("page_end", [None] * len(urls))
-            out: list[dict] = []
-            for url, html, path, s, e in zip(urls, htmls, paths, starts, ends):
-                if html is None and path is not None:
-                    # giant-doc range row: bytes live in the blob store
-                    # (written once by the spill kernel), fetched here
-                    try:
-                        with open(path, "rb") as f:
-                            html = f.read()
-                    except OSError as exc:
-                        out.append(_empty_row(
-                            url, [], f"blob fetch failed: {exc}",
-                            time.perf_counter(), include))
-                        continue
-                out.extend(
-                    _page_rows(
-                        url, html, options, text_options, table_settings,
-                        s if ranged else None, e if ranged else None,
-                        include=include,
-                    )
-                )
-                # keep batches bounded: the flush threshold trades per-
-                # batch Arrow framing overhead against memory — object-
-                # array rows (~40 KB/page) flush every 64 pages; pruned
-                # text-only rows (~100 B/page) can batch 8x larger
-                if len(out) >= flush_rows:
-                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-                    out = []
-            if out:
-                yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+    def rows(url, html, blob_path=None, page_start=None, page_end=None):
+        if html is None and blob_path is not None:
+            # giant-doc range row: bytes live in the blob store (written
+            # once by the spill kernel), fetched here
+            try:
+                with open(blob_path, "rb") as f:
+                    html = f.read()
+            except OSError as exc:
+                return [_empty_row(url, [], f"blob fetch failed: {exc}",
+                                   time.perf_counter(), include)]
+        if not ranged:
+            page_start = page_end = None
+        return _page_rows(url, html, options, text_options, table_settings,
+                          page_start, page_end, include=include)
 
-    return kernel
+    # keep batches bounded: the flush threshold trades per-batch Arrow
+    # framing overhead against memory — object-array rows (~40 KB/page)
+    # flush every 64 pages; pruned text-only rows (~100 B/page) can
+    # batch 8x larger
+    return rows_kernel(rows, page_schema(include),
+                       flush_rows=512 if include == () else 64)
 
 
 # -- skew handling ------------------------------------------------------------------
@@ -435,42 +414,29 @@ def _make_spill_kernel(spill_dir: str):
     split into 100 ranges ships its bytes through ZERO shuffles instead
     of 100 copies (round-1 judge finding)."""
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def spill(url, html):
         import hashlib
         import os
 
         from .kernel.docparser import PdfDocument
 
-        schema = _arrow_schema_for(SPILL_SCHEMA)
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                # content-addressed blob name: same url with different
-                # bytes (another scale factor / a re-crawl) must NOT hit
-                # a stale spill file
-                name = hashlib.sha1(html).hexdigest() + ".pdf"
-                path = os.path.join(spill_dir, name)
-                # idempotent: deterministic name, atomic rename
-                if not os.path.exists(path):
-                    tmp = path + f".tmp{os.getpid()}"
-                    with open(tmp, "wb") as f:
-                        f.write(html)
-                    os.replace(tmp, path)
-                try:
-                    n = len(PdfDocument(html, []).pages())
-                except Exception:  # noqa: BLE001
-                    n = 1
-                out.append({"url": url, "blob_path": path, "n_pages": n})
-            yield pa.RecordBatch.from_pylist(out, schema=schema)
+        # content-addressed blob name: same url with different bytes
+        # (another scale factor / a re-crawl) must NOT hit a stale spill
+        # file
+        path = os.path.join(spill_dir, hashlib.sha1(html).hexdigest() + ".pdf")
+        # idempotent: deterministic name, atomic rename
+        if not os.path.exists(path):
+            tmp = path + f".tmp{os.getpid()}"
+            with open(tmp, "wb") as f:
+                f.write(html)
+            os.replace(tmp, path)
+        try:
+            n = len(PdfDocument(html, []).pages())
+        except Exception:  # noqa: BLE001
+            n = 1
+        return [{"url": url, "blob_path": path, "n_pages": n}]
 
-    return kernel
-
-
-def _arrow_schema_for(schema: StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(schema)
+    return rows_kernel(spill, SPILL_SCHEMA)
 
 
 def split_giant_documents(df: DataFrame, max_bytes: int = 8 << 20,
@@ -569,15 +535,13 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
         cols = split_giant_documents(cols, max_bytes=max_bytes,
                                      pages_per_split=pages_per_split,
                                      spill_dir=spill_dir)
-        ranged = True
     else:
         cols = cols.select("url", "html",
                            F.lit(None).cast("int").alias("page_start"),
                            F.lit(None).cast("int").alias("page_end"))
-        ranged = True
     cols = salt(cols, num_partitions)
     kernel = make_extract_kernel(options, text_options, table_settings,
-                                 ranged=ranged, include=include)
+                                 ranged=True, include=include)
     return cols.mapInArrow(kernel, page_schema(include))
 
 
@@ -783,54 +747,53 @@ DOC_META_SCHEMA = StructType(
 )
 
 
+def _per_document(df: DataFrame, fn, schema: StructType) -> DataFrame:
+    """One mapInArrow pass of the row function `fn(url, html)` over the
+    documents of df."""
+    return df.select("url", "html").mapInArrow(rows_kernel(fn, schema), schema)
+
+
 def document_meta(df: DataFrame,
                   options: ExtractOptions | None = None) -> DataFrame:
     """Document-level extractors as one light mapInArrow pass: /Info
     metadata (D1), flattened bookmarks (D2), AcroForm fields (D3).
     Does NOT interpret content streams — structure-only, so it is far
     cheaper than extract_pages (pdf.rs:306-354)."""
-    arrow_schema = _arrow_schema_for(DOC_META_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def doc_meta(url, html):
         from .kernel.document import Document
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                row = {
-                    "url": url, "title": None, "author": None,
-                    "subject": None, "creator": None, "producer": None,
-                    "creation_date": None, "mod_date": None, "n_pages": 0,
-                    "bookmarks": [], "form_fields": [], "error": None,
+        row = {
+            "url": url, "title": None, "author": None, "subject": None,
+            "creator": None, "producer": None, "creation_date": None,
+            "mod_date": None, "n_pages": 0, "bookmarks": [],
+            "form_fields": [], "error": None,
+        }
+        try:
+            doc = Document(html, options)
+            meta = doc.metadata()
+            row.update(
+                {
+                    "title": meta.get("Title"),
+                    "author": meta.get("Author"),
+                    "subject": meta.get("Subject"),
+                    "creator": meta.get("Creator"),
+                    "producer": meta.get("Producer"),
+                    "creation_date": meta.get("CreationDate"),
+                    "mod_date": meta.get("ModDate"),
+                    "n_pages": doc.page_count,
+                    "bookmarks": doc.bookmarks(),
+                    "form_fields": doc.form_fields(),
                 }
-                try:
-                    doc = Document(html, options)
-                    meta = doc.metadata()
-                    row.update(
-                        {
-                            "title": meta.get("Title"),
-                            "author": meta.get("Author"),
-                            "subject": meta.get("Subject"),
-                            "creator": meta.get("Creator"),
-                            "producer": meta.get("Producer"),
-                            "creation_date": meta.get("CreationDate"),
-                            "mod_date": meta.get("ModDate"),
-                            "n_pages": doc.page_count,
-                            "bookmarks": doc.bookmarks(),
-                            "form_fields": doc.form_fields(),
-                        }
-                    )
-                    if doc.page_count == 0:
-                        row["error"] = "no pages: " + (
-                            doc.warnings[0] if doc.warnings else "empty document"
-                        )
-                except Exception as e:  # noqa: BLE001 — lenient
-                    row["error"] = f"open failed: {e}"
-                out.append(row)
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+            )
+            if doc.page_count == 0:
+                row["error"] = "no pages: " + (
+                    doc.warnings[0] if doc.warnings else "empty document"
+                )
+        except Exception as e:  # noqa: BLE001 — lenient
+            row["error"] = f"open failed: {e}"
+        return [row]
 
-    return df.select("url", "html").mapInArrow(kernel, DOC_META_SCHEMA)
+    return _per_document(df, doc_meta, DOC_META_SCHEMA)
 
 
 def assemble_text_from_words(words: DataFrame,
@@ -1001,24 +964,17 @@ def render_html(df: DataFrame,
                 options: ExtractOptions | None = None) -> DataFrame:
     """D9 semantic HTML per document (html.rs:74-119): headings by
     font-size ratio, strong/em from fontname, bullet lists, tables."""
-    arrow_schema = _arrow_schema_for(HTML_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def render(url, html):
         from .kernel.document import Document
         from .kernel.html import document_to_html
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    rendered = document_to_html(Document(html, options))
-                except Exception:  # noqa: BLE001 — lenient
-                    rendered = None
-                out.append({"url": url, "html_text": rendered})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            rendered = document_to_html(Document(html, options))
+        except Exception:  # noqa: BLE001 — lenient
+            rendered = None
+        return [{"url": url, "html_text": rendered}]
 
-    return df.select("url", "html").mapInArrow(kernel, HTML_SCHEMA)
+    return _per_document(df, render, HTML_SCHEMA)
 
 
 MARKDOWN_SCHEMA = StructType(
@@ -1038,23 +994,16 @@ def render_markdown(df: DataFrame,
     {image_count, image_filenames, page_count, title, warning_count}.
     Arrow-batched kernel, one pass per document — pages of one doc run
     inside the batch, documents parallelize across partitions."""
-    arrow_schema = _arrow_schema_for(MARKDOWN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def render(url, html):
         from .kernel.markdown import markdown_json
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    md, meta = markdown_json(html)
-                except Exception:  # noqa: BLE001 — lenient
-                    md, meta = None, None
-                out.append({"url": url, "markdown": md, "meta_json": meta})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            md, meta = markdown_json(html)
+        except Exception:  # noqa: BLE001 — lenient
+            md, meta = None, None
+        return [{"url": url, "markdown": md, "meta_json": meta}]
 
-    return df.select("url", "html").mapInArrow(kernel, MARKDOWN_SCHEMA)
+    return _per_document(df, render, MARKDOWN_SCHEMA)
 
 
 SVG_SCHEMA = StructType(
@@ -1070,26 +1019,19 @@ def render_svg(df: DataFrame,
                options: ExtractOptions | None = None) -> DataFrame:
     """D10 SVG rendering (svg.rs): one deterministic SVG document per
     page — shapes as rect/line/path, words as positioned text."""
-    arrow_schema = _arrow_schema_for(SVG_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def render(url, html):
         from .kernel.document import Document
         from .kernel.svg import page_to_svg
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        out.append({"url": url, "page_number": i + 1,
-                                    "svg": page_to_svg(doc.page(i))})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            doc = Document(html, options)
+            for i in range(doc.page_count):
+                yield {"url": url, "page_number": i + 1,
+                       "svg": page_to_svg(doc.page(i))}
+        except Exception:  # noqa: BLE001 — lenient: keep pages so far
+            return
 
-    return df.select("url", "html").mapInArrow(kernel, SVG_SCHEMA)
+    return _per_document(df, render, SVG_SCHEMA)
 
 
 STRUCT_SCHEMA = StructType(
@@ -1110,24 +1052,17 @@ def structure_table(df: DataFrame,
     """D5: flattened /StructTreeRoot rows in depth-first order
     (struct_tree.rs; recursion encoded as elem_id/parent_id/level
     because Spark has no recursive types). Structure-only pass."""
-    arrow_schema = _arrow_schema_for(STRUCT_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def elements(url, html):
         from .kernel.docextras import structure_tree
         from .kernel.document import Document
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for r in structure_tree(Document(html, options).doc):
-                        out.append({"url": url, **r})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            for r in structure_tree(Document(html, options).doc):
+                yield {"url": url, **r}
+        except Exception:  # noqa: BLE001 — lenient
+            return
 
-    return df.select("url", "html").mapInArrow(kernel, STRUCT_SCHEMA)
+    return _per_document(df, elements, STRUCT_SCHEMA)
 
 
 def semantic_text(pages: DataFrame, structure: DataFrame) -> DataFrame:
@@ -1188,28 +1123,20 @@ def table_debug_table(df: DataFrame,
     """T15 table debug pipeline (table.rs:1546-1640): one row per page
     with per-stage counters (raw→selected→merged edges, intersections,
     cells, tables) — the lineage surface for tuning table settings."""
-    arrow_schema = _arrow_schema_for(TABLE_DEBUG_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def debug(url, html):
         from .kernel.document import Document
         from .kernel.tables import table_debug
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        page = doc.page(i)
-                        dbg = table_debug(page.edges(),
-                                          page.extract_words(), settings)
-                        out.append({"url": url, "page_number": i + 1, **dbg})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            doc = Document(html, options)
+            for i in range(doc.page_count):
+                page = doc.page(i)
+                dbg = table_debug(page.edges(), page.extract_words(), settings)
+                yield {"url": url, "page_number": i + 1, **dbg}
+        except Exception:  # noqa: BLE001 — lenient
+            return
 
-    return df.select("url", "html").mapInArrow(kernel, TABLE_DEBUG_SCHEMA)
+    return _per_document(df, debug, TABLE_DEBUG_SCHEMA)
 
 
 SIGNATURE_SCHEMA = StructType(
@@ -1232,24 +1159,17 @@ def signatures_table(df: DataFrame,
     structure-only pass over the AcroForm — one row per /Sig field with
     its /V dictionary resolved in the SAME recursive walk (no index
     re-pairing)."""
-    arrow_schema = _arrow_schema_for(SIGNATURE_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def sigs(url, html):
         from .kernel.docextras import signatures
         from .kernel.document import Document
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for s in signatures(Document(html, options).doc):
-                        out.append({"url": url, **s})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            for s in signatures(Document(html, options).doc):
+                yield {"url": url, **s}
+        except Exception:  # noqa: BLE001 — lenient
+            return
 
-    return df.select("url", "html").mapInArrow(kernel, SIGNATURE_SCHEMA)
+    return _per_document(df, sigs, SIGNATURE_SCHEMA)
 
 
 VALIDATION_SCHEMA = StructType(
@@ -1267,24 +1187,17 @@ def validation_table(df: DataFrame,
     """D7 spec-violation diagnostics (validation.rs, pdf.rs:776): one
     row per finding; a clean document yields no rows. Structure-only,
     never raises (lenient)."""
-    arrow_schema = _arrow_schema_for(VALIDATION_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def findings(url, html):
         from .kernel.document import Document
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for v in Document(html, options).validate():
-                        out.append({"url": url, **v})
-                except Exception as e:  # noqa: BLE001 — lenient
-                    out.append({"url": url, "code": "open-failed",
-                                "severity": "error", "message": str(e)})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            for v in Document(html, options).validate():
+                yield {"url": url, **v}
+        except Exception as e:  # noqa: BLE001 — lenient
+            yield {"url": url, "code": "open-failed", "severity": "error",
+                   "message": str(e)}
 
-    return df.select("url", "html").mapInArrow(kernel, VALIDATION_SCHEMA)
+    return _per_document(df, findings, VALIDATION_SCHEMA)
 
 
 def bookmarks_table(meta: DataFrame) -> DataFrame:
@@ -1319,35 +1232,25 @@ def search_pages(df: DataFrame, pattern: str, regex: bool = True,
                  options: ExtractOptions | None = None) -> DataFrame:
     """P6 regex search as a pipeline op: (url, html) → one row per match
     with the union bbox of the matched chars (search.rs:59-145)."""
-    arrow_schema = _arrow_schema_for(SEARCH_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def matches(url, html):
         from .kernel.docextras import search_chars
         from .kernel.document import Document
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        page = doc.page(i)
-                        for m in search_chars(page.chars, pattern, regex, case):
-                            out.append(
-                                {
-                                    "url": url, "page_number": i + 1,
-                                    "match_text": m["text"],
-                                    "start": m["start"], "end": m["end"],
-                                    "x0": m["x0"], "top": m["top"],
-                                    "x1": m["x1"], "bottom": m["bottom"],
-                                }
-                            )
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        try:
+            doc = Document(html, options)
+            for i in range(doc.page_count):
+                for m in search_chars(doc.page(i).chars, pattern, regex, case):
+                    yield {
+                        "url": url, "page_number": i + 1,
+                        "match_text": m["text"],
+                        "start": m["start"], "end": m["end"],
+                        "x0": m["x0"], "top": m["top"],
+                        "x1": m["x1"], "bottom": m["bottom"],
+                    }
+        except Exception:  # noqa: BLE001 — lenient
+            return
 
-    return df.select("url", "html").mapInArrow(kernel, SEARCH_SCHEMA)
+    return _per_document(df, matches, SEARCH_SCHEMA)
 
 
 HTML_MAIN_SCHEMA = StructType(
@@ -1366,28 +1269,15 @@ def html_main_content(df: DataFrame, min_words: int = 5,
     heuristics over an Arrow-batched kernel — (url, html) → main text +
     strip diagnostics. Per-row map, no shuffle; malformed markup yields
     an empty row, never a task failure."""
-    arrow_schema = _arrow_schema_for(HTML_MAIN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def main(url, html):
         from .kernel.htmlstrip import extract_main_content
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_main_content(html or b"", min_words,
-                                         max_link_density)
-                out.append(
-                    {
-                        "url": url,
-                        "main_text": r["text"],
-                        "n_blocks_kept": r["n_blocks_kept"],
-                        "n_blocks_total": r["n_blocks_total"],
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        r = extract_main_content(html or b"", min_words, max_link_density)
+        return [{"url": url, "main_text": r["text"],
+                 "n_blocks_kept": r["n_blocks_kept"],
+                 "n_blocks_total": r["n_blocks_total"]}]
 
-    return df.select("url", "html").mapInArrow(kernel, HTML_MAIN_SCHEMA)
+    return _per_document(df, main, HTML_MAIN_SCHEMA)
 
 
 HTML_MARKDOWN_SCHEMA = StructType(
@@ -1406,21 +1296,14 @@ def html_markdown(df: DataFrame) -> DataFrame:
     extract_main_content scores). Arrow-batched per-row map over
     (url, html) — no shuffle; malformed markup renders what parsed,
     never a task failure."""
-    arrow_schema = _arrow_schema_for(HTML_MARKDOWN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def render(url, html):
         from .kernel.htmlstrip import html_to_markdown
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                r = html_to_markdown(html or b"")
-                out.append({"url": url, "markdown": r["markdown"],
-                            "n_blocks": r["n_blocks"]})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        r = html_to_markdown(html or b"")
+        return [{"url": url, "markdown": r["markdown"],
+                 "n_blocks": r["n_blocks"]}]
 
-    return df.select("url", "html").mapInArrow(kernel, HTML_MARKDOWN_SCHEMA)
+    return _per_document(df, render, HTML_MARKDOWN_SCHEMA)
 
 
 HTML_LINKS_SCHEMA = StructType(
@@ -1435,20 +1318,13 @@ def html_links(df: DataFrame) -> DataFrame:
     """Outgoing links per page: (url, href) exploded rows from every
     <a href> (including chrome subtrees — the link graph wants them
     all). Per-row map + in-kernel explode, no shuffle."""
-    arrow_schema = _arrow_schema_for(HTML_LINKS_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def links(url, html):
         from .kernel.htmlstrip import extract_main_content
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                for href in extract_main_content(html or b"")["links"]:
-                    out.append({"url": url, "href": href})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        return ({"url": url, "href": href}
+                for href in extract_main_content(html or b"")["links"])
 
-    return df.select("url", "html").mapInArrow(kernel, HTML_LINKS_SCHEMA)
+    return _per_document(df, links, HTML_LINKS_SCHEMA)
 
 
 HTML_ANCHORS_SCHEMA = StructType(
@@ -1465,21 +1341,13 @@ def html_anchors(df: DataFrame) -> DataFrame:
     exploded rows from every <a href>…</a> (chrome subtrees included —
     anchor-text aggregation wants nav/footer links too). Same per-row
     map + in-kernel explode as html_links, no shuffle."""
-    arrow_schema = _arrow_schema_for(HTML_ANCHORS_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def anchors(url, html):
         from .kernel.htmlstrip import extract_main_content
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                for href, anchor in (
-                        extract_main_content(html or b"")["anchors"]):
-                    out.append({"url": url, "href": href, "anchor": anchor})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+        return ({"url": url, "href": href, "anchor": anchor}
+                for href, anchor in extract_main_content(html or b"")["anchors"])
 
-    return df.select("url", "html").mapInArrow(kernel, HTML_ANCHORS_SCHEMA)
+    return _per_document(df, anchors, HTML_ANCHORS_SCHEMA)
 
 
 def lineage(pages: DataFrame) -> DataFrame:

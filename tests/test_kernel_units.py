@@ -707,3 +707,21 @@ def test_scn_through_named_colorspace():
     ])
     ch = Document(pdf).page(0).chars[0]
     assert ch["non_stroking_color"] == ("cmyk", [0.1, 0.2, 0.3, 0.4])
+
+
+# -- page extras -----------------------------------------------------------------
+
+def test_page_extras_thunk_released_once_read():
+    data = pdfgen.pdf_from_text(
+        "hello world",
+        annots="<< /Type /Annot /Subtype /Link /Rect [72 700 272 715] "
+               "/A << /S /URI /URI (https://ref.example/1) >> >>")
+    page = open_pdf(data).page(0)
+    annots, links = page._extras_thunk()
+    assert links, "the fixture must carry a hyperlink"
+    assert page.annotations == annots
+    # the thunk pins the whole Document; it must go once its results
+    # are cached
+    assert page._extras_thunk is None
+    assert page.hyperlinks == links
+    assert page.annotations == annots
