@@ -86,12 +86,13 @@ def _corpus_cache_version() -> int:
     kernels import (a git checkout or edit bumps it)."""
     import os
 
-    from ..functions import multimodal
+    from .. import arrow_rows
+    from ..functions import gif, multimodal
     from . import pdfgen
 
-    return int(max(os.path.getmtime(__file__),
-                   os.path.getmtime(pdfgen.__file__),
-                   os.path.getmtime(multimodal.__file__)))
+    return int(max(os.path.getmtime(f) for f in (
+        __file__, arrow_rows.__file__, gif.__file__, multimodal.__file__,
+        pdfgen.__file__)))
 
 
 def cached_corpus(spark, sf_dir: str, name: str, build) -> DataFrame:
