@@ -14,6 +14,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def rows_kernel(fn: Callable[..., Iterable[dict]], schema,
@@ -25,8 +26,6 @@ def rows_kernel(fn: Callable[..., Iterable[dict]], schema,
     once, here). One output batch per input batch (none when `fn` gave
     no rows), split every `flush_rows` rows when that is given so a
     batch of large rows stays bounded."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     arrow_schema = to_arrow_schema(schema)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
